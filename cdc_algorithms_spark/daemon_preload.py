@@ -11,10 +11,14 @@ of process CPU on imports alone — guide §4.5 (initialise heavyweight
 state once) applied at the daemon level, where it amortises across
 every worker instead of once per worker.
 
-The chunker kernel modules are preloaded too (numpy is their only heavy
-dependency; the compiled .so probe is per-process and cheap). Failures
-are swallowed: a missing optional module must never take down worker
-creation — the fork just pays that import lazily as before.
+Failures are swallowed: a missing optional module must never take down
+worker creation — the fork just pays that import lazily as before.
+
+The daemon also freezes zipimport cache invalidation for the archives of
+the Spark install on its ``sys.path`` — ``pyspark.zip``, ``py4j-*.zip``
+and ``spark-core_*.jar``, which Spark lists there because it carries
+Python files and which is the largest of the three. Every task would
+otherwise re-read each archive's central directory (see below).
 """
 
 from __future__ import annotations
@@ -33,37 +37,50 @@ for _mod in (
         pass
 
 # ---------------------------------------------------------------------------
-# Freeze zipimport cache invalidation. pyspark.worker_util.
-# setup_spark_files calls importlib.invalidate_caches() ON EVERY TASK;
-# for every ZIP on sys.path (pyspark.zip is 3.5 MB, plus py4j) the
-# zipimporter then re-reads the archive's whole central directory —
-# measured ~230 ms of worker CPU per task (profile: zipimport.
-# _read_directory + _unpack_uint16/32 dominate), ~8 s of pure overhead
-# for one 32-task stage. The zips are part of the immutable Spark
-# install, so re-reading them can never observe a change; directory
-# (FileFinder) invalidation — the part addPyFile-style dynamic code
-# shipping relies on — is left untouched.
+# Freeze zipimport cache invalidation for the Spark install's archives.
+# pyspark.worker_util.setup_spark_files calls importlib.invalidate_caches()
+# ON EVERY TASK; for every archive on sys.path the zipimporter then
+# re-reads its whole central directory. The worker's sys.path holds
+# pyspark.zip (3.5 MB), py4j-*.zip and spark-core_*.jar: Spark puts the
+# jar there because it carries Python files too, and with ~5,400 entries
+# it is the most expensive of the three — profiled at ~12 of 13.5 s for
+# an empty 32-task mapInPandas (zipimport._read_directory). These
+# archives are part of the immutable install, so re-reading them can
+# never observe a change.
+#
+# The frozen set is every .zip/.jar on the daemon's sys.path whose
+# realpath lies under realpath($SPARK_HOME), computed ONCE here: forked
+# workers inherit it, and a per-task realpath would cost ~3 ms a task.
+# Archives that are not on sys.path at daemon start — zips shipped with
+# ``sc.addPyFile``/``--py-files``, which the worker adds per task — keep
+# the stock invalidation, as does directory (FileFinder) invalidation.
 # ---------------------------------------------------------------------------
 try:
     import os
     import sys
     import zipimport
 
+    def _install_archives(paths: list[str], spark_home: str | None) -> frozenset:
+        """The .zip/.jar entries of ``paths`` that resolve into the Spark
+        install at ``spark_home`` (none when it is unset)."""
+        if not spark_home:
+            return frozenset()
+        root = os.path.join(os.path.realpath(spark_home), "")
+        return frozenset(
+            p
+            for p in paths
+            if p.endswith((".zip", ".jar"))
+            and os.path.realpath(p).startswith(root)
+        )
+
+    _FROZEN_ARCHIVES = _install_archives(sys.path, os.environ.get("SPARK_HOME"))
     _orig_invalidate = zipimport.zipimporter.invalidate_caches
 
     def _invalidate_unless_spark_install(self):  # type: ignore[no-untyped-def]
-        """Skip invalidation ONLY for the immutable Spark-install
-        archives (pyspark.zip, py4j-*.zip): those can never change
-        under a running application, so re-reading their central
-        directory per task is pure waste. Any OTHER zip — e.g. one
-        shipped via ``sc.addPyFile``/``--py-files`` that an application
-        could legitimately re-ship mid-run — falls through to the
-        original method, so dynamic code shipping keeps its stock
-        invalidation semantics."""
-        base = os.path.basename(getattr(self, "archive", "") or "")
-        if base == "pyspark.zip" or (
-            base.startswith("py4j-") and base.endswith(".zip")
-        ):
+        """Skip invalidation ONLY for the Spark-install archives found
+        at daemon start; any other zip falls through to the original
+        method, so dynamic code shipping keeps its stock semantics."""
+        if getattr(self, "archive", None) in _FROZEN_ARCHIVES:
             return
         _orig_invalidate(self)
 

@@ -38,19 +38,26 @@ never a single-task O(chunks) bottleneck for a huge blob. The final
 boundary ``blob_len-1`` is always kept so bytes are conserved (the
 reference can drop a too-close final boundary and silently lose tail
 bytes from its metrics; we deviate for byte conservation, which the
-oracle concat checks require).
+oracle concat checks require). The same in-order walk assigns the
+per-blob ``chunk_idx``: each seam cut row carries the number of done
+chunks that follow it, so the merge numbers the chunks it emits itself
+and hands out one base ordinal per segment; a done row's ordinal is
+its segment's base plus its index among that segment's done chunks.
 
 Phase C — seam-chunk reassembly, for the few spans the merge owns
 (first/second owned cuts per segment + the final chunk): those
 range-join against the Phase-A piece rows, pieces are sliced with
 ``substring`` on binary, reassembled with ``array_sort`` +
 ``aggregate``/``concat``, and fingerprinted with the same blake2b-64
-family as Phase A; the global per-blob ``chunk_idx`` is then a
-distributed ``row_number`` over offsets. Chunk CONTENT therefore never
-shuffles and the source is never re-read — at 100 TB the dominant
-costs of the naive design (a second full-corpus shuffle, a
-corpus-sized cache, a per-blob merge task) all disappear; this
-pipeline ships cuts, hashes, and ~1% of payload bytes.
+family as Phase A. Done rows pick up ``chunk_idx`` through a LEFT join
+to the O(segments) base table, keyed unique on ``(src_id, seg_idx)``,
+so Catalyst drops the join (and Phase B's base rows) from any plan that
+never reads ``chunk_idx`` — aggregate consumers such as dedup stats pay
+for no ordinal machinery, and no plan ever needs a per-blob window.
+Chunk CONTENT therefore never shuffles and the source is never
+re-read — at 100 TB the dominant costs of the naive design (a second
+full-corpus shuffle, a corpus-sized cache, a per-blob merge task) all
+disappear; this pipeline ships cuts, hashes, and ~1% of payload bytes.
 
 Not replicated: the rabin.rs:101 segment-bound bug (right bound fixed at
 ``len/T``) and the O(T·n) per-thread buffer clone at rabin.rs:99.
@@ -60,7 +67,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.chunkers.fast import (
@@ -200,23 +207,20 @@ def parallel_chunk_blob(
     overlap: int | None = None,
     id_col: str = "src_id",
     content_col: str = "content",
-    ordinals: str = "bucketed",
 ) -> DataFrame:
     """Distributed CDC chunking of binary blobs.
 
     Returns ``(src_id, algo, chunk_idx, offset, length, hash)`` where
     ``hash = blake2b64(chunk bytes)`` (the reference's DefaultHasher
-    role, ae.rs:75-78; see ``_h64``). See :func:`chunk_segments` for
-    the ``ordinals`` modes.
+    role, ae.rs:75-78; see ``_h64``) and ``chunk_idx`` is the chunk's
+    ordinal by offset within its blob.
     """
     if overlap is None:
         overlap = _default_overlap(
             make_params(algo, expected_size, seed, window_size=window_size)
         )
     segments = segment_blob_df(blobs, segment_len, overlap, id_col, content_col)
-    return chunk_segments(
-        segments, algo, expected_size, seed, window_size, ordinals=ordinals
-    )
+    return chunk_segments(segments, algo, expected_size, seed, window_size)
 
 
 def chunk_segments(
@@ -225,7 +229,6 @@ def chunk_segments(
     expected_size: int,
     seed: int = 0,
     window_size: int | None = None,
-    ordinals: str = "bucketed",
 ) -> DataFrame:
     """The segment→chunk pipeline over a prebuilt segment table
     (``src_id, seg_idx, left, right, blob_len, scan_start, payload``) —
@@ -233,20 +236,12 @@ def chunk_segments(
     :func:`cdc_algorithms_spark.sources.segmented_files.segment_file_ranges`
     (executor-side range reads of files, the no-whole-blob 100 TB path).
 
-    ``ordinals`` controls the per-blob ``chunk_idx`` column:
-
-    * ``"bucketed"`` (default) — two-phase prefix count; every window
-      partition is bounded, correct at any blob size, at the price of
-      one metadata-row shuffle that Catalyst cannot prune away.
-    * ``"none"`` — omit ``chunk_idx`` entirely; the right choice for
-      aggregate-only consumers (dedup stats, concat checks) where the
-      ordinal machinery would be dead weight in the plan.
-    * ``"window"`` — single ``row_number`` window per blob; prunable
-      when unused, but puts all of a blob's chunk rows in one task —
-      only for small-blob corpora.
+    Returns ``(src_id, algo, chunk_idx, offset, length, hash)``.
+    ``chunk_idx`` (the chunk's ordinal by offset within its blob) comes
+    from Phase B's in-order seam walk plus a LEFT join of the done rows
+    to one base row per segment; a consumer that never reads it (dedup
+    stats, concat checks) gets a plan with no ordinal join or window.
     """
-    if ordinals not in ("bucketed", "none", "window"):
-        raise ValueError(f"ordinals must be bucketed|none|window, got {ordinals!r}")
     if algo not in _BOUND_FNS:
         raise ValueError(f"unknown CDC algo {algo!r}; one of {sorted(_BOUND_FNS)}")
     params = make_params(algo, expected_size, seed, window_size=window_size)
@@ -261,12 +256,17 @@ def chunk_segments(
     #   kind=2  done-chunk rows — (offset, length, hash) of every chunk
     #           the seam merge provably cannot change (see below): the
     #           overwhelming majority, they bypass the merge entirely;
+    #           ``ord`` is the row's index among its segment's done
+    #           chunks;
     #   kind=0  seam cut rows   — ONLY the merge-relevant cuts: a
     #           segment's first two owned cuts (the rejectable /
     #           rebuildable ones, b=-2) and its last owned cut as
     #           kept-context (b=-3, never re-emitted as a chunk), plus
     #           the blob-final sentinel from the task owning the last
-    #           segment — ~3 rows per segment;
+    #           segment — ~3 rows per segment; ``ord`` is the number of
+    #           done chunks that directly follow the cut (nonzero only
+    #           on a segment's 2nd owned cut — the per-segment summary
+    #           Phase B turns into base ordinals);
     #   kind=1  piece rows      — raw bytes of the few spans the merge
     #           COULD reassign (head up to the 2nd owned cut, tail after
     #           the last owned cut; whole segment when it owns <2 cuts)
@@ -292,21 +292,25 @@ def chunk_segments(
 
         for pdf in batches:
             src_ids: list[int] = []
+            seg_idxs: list[int] = []
             kinds: list[int] = []
             a_vals: list[int] = []
             b_vals: list[int] = []
             blob_lens: list[int] = []
             hashes: list[int] = []
             pieces: list[object] = []
+            ords: list[int] = []
 
-            def emit(sid, kind, a, b, blob_len, h, piece):
+            def emit(sid, seg, kind, a, b, blob_len, h, piece, o=0):
                 src_ids.append(sid)
+                seg_idxs.append(seg)
                 kinds.append(kind)
                 a_vals.append(a)
                 b_vals.append(b)
                 blob_lens.append(blob_len)
                 hashes.append(h)
                 pieces.append(piece)
+                ords.append(o)
 
             # Lazy segment tables (sources/segmented_files.py) carry a
             # ``path`` instead of ``payload``: this task range-reads its
@@ -328,14 +332,14 @@ def chunk_segments(
                         f.seek(int(starts[row_i]))
                         return f.read(int(rights[row_i]) - int(starts[row_i]))
 
-            for row_i, (sid, left, right, scan_start, blob_len) in enumerate(
+            for row_i, (sid, seg, left, right, scan_start, blob_len) in enumerate(
                 zip(
-                    pdf["src_id"], pdf["left"], pdf["right"],
+                    pdf["src_id"], pdf["seg_idx"], pdf["left"], pdf["right"],
                     pdf["scan_start"], pdf["blob_len"],
                 )
             ):
                 payload = get_payload(row_i)
-                sid, left, right = int(sid), int(left), int(right)
+                sid, seg, left, right = int(sid), int(seg), int(left), int(right)
                 scan_start, blob_len = int(scan_start), int(blob_len)
                 view = memoryview(payload)
                 owned: list[int] = []  # relative cut positions in owned range
@@ -349,48 +353,55 @@ def chunk_segments(
                         prev_rel = owned[j - 1]
                         # merge-certain chunk: bypasses Phase B entirely
                         emit(
-                            sid, 2, scan_start + prev_rel + 1, rel - prev_rel,
+                            sid, seg, 2, scan_start + prev_rel + 1, rel - prev_rel,
                             blob_len, _h64(view[prev_rel + 1 : rel + 1]), None,
+                            j - 2,
                         )
                         if j == k - 1:
                             # kept-context for the next seam's decision
-                            emit(sid, 0, scan_start + rel, -3, blob_len, 0, None)
+                            emit(sid, seg, 0, scan_start + rel, -3, blob_len, 0, None)
                     else:
                         # rejectable / rebuildable seam cut (b=-2: "emit
-                        # a chunk if accepted"; hash resolved in Phase C)
-                        emit(sid, 0, scan_start + rel, -2, blob_len, 0, None)
+                        # a chunk if accepted"; hash resolved in Phase C);
+                        # the 2nd one also carries the done-chunk count
+                        emit(
+                            sid, seg, 0, scan_start + rel, -2, blob_len, 0, None,
+                            k - 2 if j == 1 else 0,
+                        )
                 if right == blob_len and not (
                     owned and scan_start + owned[-1] == blob_len - 1
                 ):
                     # blob-final sentinel boundary
-                    emit(sid, 0, blob_len - 1, -2, blob_len, 0, None)
+                    emit(sid, seg, 0, blob_len - 1, -2, blob_len, 0, None)
                 # piece rows: bytes the seam merge could reassign
                 if k >= 2:
                     head_to = scan_start + owned[1] + 1
                     emit(
-                        sid, 1, left, head_to, blob_len, 0,
+                        sid, seg, 1, left, head_to, blob_len, 0,
                         view[left - scan_start : head_to - scan_start].tobytes(),
                     )
                     tail_from = scan_start + owned[-1] + 1
                     if tail_from < right:
                         emit(
-                            sid, 1, tail_from, right, blob_len, 0,
+                            sid, seg, 1, tail_from, right, blob_len, 0,
                             view[tail_from - scan_start : right - scan_start].tobytes(),
                         )
                 else:
                     emit(
-                        sid, 1, left, right, blob_len, 0,
+                        sid, seg, 1, left, right, blob_len, 0,
                         view[left - scan_start : right - scan_start].tobytes(),
                     )
             yield pd.DataFrame(
                 {
                     "src_id": pd.Series(src_ids, dtype="int64"),
+                    "seg_idx": pd.Series(seg_idxs, dtype="int64"),
                     "kind": pd.Series(kinds, dtype="int32"),
                     "a": pd.Series(a_vals, dtype="int64"),
                     "b": pd.Series(b_vals, dtype="int64"),
                     "blob_len": pd.Series(blob_lens, dtype="int64"),
                     "hash": pd.Series(hashes, dtype="int64"),
                     "piece": pd.Series(pieces, dtype="object"),
+                    "ord": pd.Series(ords, dtype="int64"),
                 }
             )
 
@@ -398,8 +409,8 @@ def chunk_segments(
 
     scanned = segments.mapInPandas(
         scan,
-        "src_id long, kind int, a long, b long, blob_len long, "
-        "hash long, piece binary",
+        "src_id long, seg_idx long, kind int, a long, b long, blob_len long, "
+        "hash long, piece binary, ord long",
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # Materialize EAGERLY: three subtrees (done rows, seam cuts, pieces)
     # read this, and concurrent query stages that find a partition
@@ -408,12 +419,18 @@ def chunk_segments(
 
     seam_cuts = scanned.where(F.col("kind") == 0).select(
         "src_id",
+        "seg_idx",
         F.col("a").alias("cut"),
         "blob_len",
         F.col("b").alias("flavor"),
+        F.col("ord").alias("n_done"),
     )
 
     # --- Phase B: seam merge per blob (O(segments) rows, not O(chunks)) ---
+    # Output mixes two row shapes: merge-emitted chunks (seg_idx NULL,
+    # chunk_idx = their ordinal) and one base row per segment with done
+    # chunks (offset/length NULL, chunk_idx = the ordinal of that
+    # segment's first done chunk).
     def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
@@ -426,29 +443,57 @@ def chunk_segments(
             pdf.sort_values(["cut", "flavor"], ascending=[True, False])
             .drop_duplicates("cut", keep="first")
         )
-        offsets: list[int] = []
-        lengths: list[int] = []
+        segs: list[object] = []
+        offsets: list[object] = []
+        lengths: list[object] = []
+        idxs: list[int] = []
         last = -1
-        for cut, flavor in zip(rows["cut"], rows["flavor"]):
+        n = 0  # chunks so far, in offset order
+        for cut, flavor, seg, n_done in zip(
+            rows["cut"], rows["flavor"], rows["seg_idx"], rows["n_done"]
+        ):
             cut = int(cut)
-            if not (cut == final or cut - last >= spacing):
-                continue
-            if int(flavor) != -3:
-                # accepted seam cut that ends a (merge-uncertain) chunk;
-                # context cuts' chunks already exist as done rows
-                offsets.append(last + 1)
-                lengths.append(cut - last)
-            last = cut
+            if cut == final or cut - last >= spacing:
+                if int(flavor) != -3:
+                    # accepted seam cut that ends a (merge-uncertain)
+                    # chunk; context cuts' chunks already exist as done rows
+                    segs.append(None)
+                    offsets.append(last + 1)
+                    lengths.append(cut - last)
+                    idxs.append(n)
+                    n += 1
+                last = cut
+            if n_done:
+                # the segment's done chunks follow this cut
+                segs.append(int(seg))
+                offsets.append(None)
+                lengths.append(None)
+                idxs.append(n)
+                n += int(n_done)
         return pd.DataFrame(
             {
-                "src_id": pd.Series([sid] * len(offsets), dtype="int64"),
-                "offset": pd.Series(offsets, dtype="int64"),
-                "length": pd.Series(lengths, dtype="int64"),
+                "src_id": pd.Series([sid] * len(idxs), dtype="int64"),
+                "seg_idx": pd.Series(segs, dtype="Int64"),
+                "offset": pd.Series(offsets, dtype="Int64"),
+                "length": pd.Series(lengths, dtype="Int64"),
+                "chunk_idx": pd.Series(idxs, dtype="int64"),
             }
         )
 
-    uncertain = seam_cuts.groupBy("src_id").applyInPandas(
-        merge, "src_id long, offset long, length long"
+    merged_seams = seam_cuts.groupBy("src_id").applyInPandas(
+        merge,
+        "src_id long, seg_idx long, offset long, length long, chunk_idx long",
+    )
+    uncertain = merged_seams.where(F.col("seg_idx").isNull()).select(
+        "src_id", "offset", "length", "chunk_idx"
+    )
+    # unique on (src_id, seg_idx) by construction of the aggregate, which
+    # is what lets the optimizer drop the LEFT join below when chunk_idx
+    # is unused
+    bases = (
+        merged_seams.where(F.col("seg_idx").isNotNull())
+        .groupBy("src_id", "seg_idx")
+        .agg(F.first("chunk_idx").alias("__base"))
     )
 
     # --- Phase C: seam-chunk reassembly (the rare path) -------------------
@@ -474,6 +519,7 @@ def chunk_segments(
         "src_id",
         "offset",
         "length",
+        "chunk_idx",
         "p_from",
         F.expr(
             "substring(piece, greatest(offset, p_from) - p_from + 1, "
@@ -489,65 +535,35 @@ def chunk_segments(
                     F.lit(b""),
                     lambda acc, x: F.concat(acc, x["piece"]),
                 )
-            ).alias("hash")
+            ).alias("hash"),
+            F.min("chunk_idx").alias("chunk_idx"),
         )
     )
 
-    done = scanned.where(F.col("kind") == 2).select(
-        "src_id",
-        F.col("a").alias("offset"),
-        F.col("b").alias("length"),
-        "hash",
+    done = (
+        scanned.where(F.col("kind") == 2)
+        .select(
+            "src_id",
+            "seg_idx",
+            F.col("a").alias("offset"),
+            F.col("b").alias("length"),
+            "hash",
+            "ord",
+        )
+        .join(F.broadcast(bases), ["src_id", "seg_idx"], "left")
+        .select(
+            "src_id",
+            "offset",
+            "length",
+            "hash",
+            (F.col("__base") + F.col("ord")).alias("chunk_idx"),
+        )
     )
-    merged = done.unionByName(rebuilt)
-    base_cols = [
+    return done.unionByName(rebuilt).select(
         "src_id",
         F.lit(label).alias("algo"),
+        "chunk_idx",
         "offset",
         "length",
         "hash",
-    ]
-    if ordinals == "none":
-        return merged.select(*base_cols)
-    if ordinals == "window":
-        idx_w = Window.partitionBy("src_id").orderBy("offset")
-        return merged.withColumn(
-            "chunk_idx", (F.row_number().over(idx_w) - 1).cast("long")
-        ).select(*base_cols[:2], "chunk_idx", *base_cols[2:])
-
-    # "bucketed": global chunk ordinal per blob via a two-phase prefix
-    # count — NOT a row_number over Window.partitionBy(src_id), which
-    # would put every chunk row of a blob in one task (billions of rows
-    # for a 100 TB blob). Offsets are unique within a blob (each kept
-    # cut ends exactly one chunk) and bucket = offset // W is monotone
-    # in offset, so (bucket, offset) order == offset order:
-    #   1. count chunks per (blob, bucket) — partial-agg shuffle of
-    #      metadata rows;
-    #   2. cumulative base per bucket over the tiny aggregated frame
-    #      (O(blob_len / W) rows per blob);
-    #   3. row_number within each bounded (blob, bucket) partition plus
-    #      the bucket's base.
-    bucket_w = expected_size * 1024  # ~1024 chunks per window partition
-    merged = merged.withColumn("__bkt", F.floor(F.col("offset") / bucket_w))
-    prior_buckets = (
-        Window.partitionBy("src_id")
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bases = (
-        merged.groupBy("src_id", "__bkt")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .select(
-            "src_id",
-            "__bkt",
-            F.coalesce(F.sum("__n").over(prior_buckets), F.lit(0)).alias(
-                "__base"
-            ),
-        )
-    )
-    in_bucket = Window.partitionBy("src_id", "__bkt").orderBy("offset")
-    return (
-        merged.join(bases, ["src_id", "__bkt"])
-        .withColumn("chunk_idx", F.col("__base") + F.row_number().over(in_bucket) - 1)
-        .select(*base_cols[:2], F.col("chunk_idx").cast("long"), *base_cols[2:])
     )

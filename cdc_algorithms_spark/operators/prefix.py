@@ -1,7 +1,7 @@
 """Bounded two-phase prefix sums — the scalable running-total primitive.
 
 A running sum ordered within a partition is the core of token-budget
-selection (curation, mixture planning) and ordinal assignment, but the
+selection (curation, mixture planning, packing, sampling), but the
 naive ``Window.partitionBy(key).orderBy(ord)`` puts an entire key's rows
 in ONE task — a whole language or blob on one executor at 100 TB. The
 two-phase form bounds every window partition:
@@ -14,8 +14,8 @@ two-phase form bounds every window partition:
    (key, bucket) partition.
 
 Used by ``queries_text.curation_pipeline`` (per-language token budget),
-``operators/mixture.mixture_plan`` (per-source budget), and — in
-count form — ``operators/distributed.chunk_segments`` ordinals.
+``operators/mixture.mixture_plan`` (per-source budget),
+``operators/packing`` and ``operators/sampling``.
 """
 
 from __future__ import annotations

@@ -9,9 +9,9 @@ engine-level source contract instead of a ``mapInPandas`` adapter:
 
 * ``partitions()`` — one ``InputPartition`` per (file, segment), so
   Spark's scheduler sees the true split granularity and fans segments of
-  one big file across the cluster with no ``repartition`` shuffle at all
-  (the mapInPandas route needs one to break up the driver-built meta
-  rows).
+  one big file across the cluster with no shuffle at all (the
+  mapInPandas route gets its split from the driver-built metadata
+  relation, at most ``defaultParallelism`` partitions).
 * ``read(partition)`` — runs in the executor; ``open``/``seek``/``read``
   locally, an object store's range-GET in production.
 

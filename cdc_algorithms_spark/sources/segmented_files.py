@@ -8,7 +8,7 @@ This source is the 100 TB shape from SURVEY.md §4.3: the DRIVER only
 lists paths and sizes (metadata); each EXECUTOR opens the file itself
 and reads just its assigned ``[left - overlap, right)`` byte range, so
 peak memory per task is ``segment_len + overlap`` regardless of file
-size, and segments of one file fan out across the cluster.
+size, and segments of one file spread over the scan tasks.
 
 Locally this uses plain ``open()``/``seek``; on a real cluster the same
 row shape would be produced with the object store's range-GET (fsspec /
@@ -67,7 +67,8 @@ def list_file_ranges(
 
     Only paths/offsets leave the driver — bytes never do. Deterministic
     ``src_id`` = xxhash64 of the path (computed in Spark for engine
-    consistency with other sources).
+    consistency with other sources). The rows are split over
+    ``min(n_segments, defaultParallelism)`` partitions.
     """
     if segment_len <= 0 or overlap < 0:
         raise ValueError(f"bad segment_len={segment_len} overlap={overlap}")
@@ -76,8 +77,15 @@ def list_file_ranges(
         size = os.path.getsize(path)
         for seg_idx, left in enumerate(range(0, size, segment_len)):
             rows.append((path, seg_idx, left, min(left + segment_len, size), size))
+    # one contiguous, even slice of ranges per scan task and no empty
+    # task: ship the slices as n elements (parallelize's own batching
+    # can give one slice twice the rows of another)
+    sc = spark.sparkContext
+    n = max(1, min(len(rows), sc.defaultParallelism))
+    slices = [rows[i * len(rows) // n : (i + 1) * len(rows) // n] for i in range(n)]
     meta = spark.createDataFrame(
-        rows, "path string, seg_idx long, left long, right long, blob_len long"
+        sc.parallelize(slices, n).flatMap(lambda s: s),
+        "path string, seg_idx long, left long, right long, blob_len long",
     )
     return meta.select(
         F.xxhash64("path").alias("src_id"),
@@ -99,15 +107,18 @@ def segment_file_ranges(
     """Executor-side range reads → a LAZY segment table: the rows carry
     ``path`` instead of ``payload``, and the consumer's scan task
     (``chunk_segments``) opens the file and reads its own
-    ``[scan_start, right)`` slice in the same task that chunks it.
-
-    Two scale effects vs materializing payloads here: the
-    ``repartition`` that fans one file's ranges across the cluster
-    shuffles only metadata (paths + offsets, not corpus bytes), and the
-    bytes never cross the JVM↔Python Arrow boundary an extra time —
+    ``[scan_start, right)`` slice in the same task that chunks it, so
+    the bytes never cross the JVM↔Python Arrow boundary an extra time —
     they are born in the Python worker that consumes them.
+
+    No shuffle precedes the scan: the driver-built metadata rows are
+    already split evenly over ``min(n_segments, defaultParallelism)``
+    partitions (``list_file_ranges``). A ``repartition`` here would
+    hash a few dozen rows unevenly over the shuffle partitions (measured
+    2 to 7 of 32 segments per task), and wherever AQE may coalesce it,
+    its minimum partition size merges them all into ONE scan task.
     """
     meta = list_file_ranges(spark, path_glob, segment_len, overlap)
-    return meta.repartition("src_id", "seg_idx").select(
+    return meta.select(
         "src_id", "seg_idx", "left", "right", "blob_len", "scan_start", "path"
     )

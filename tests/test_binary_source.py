@@ -127,7 +127,7 @@ def test_segment_sources_expand_directory_datasets(spark, tmp_path):
 
     def stats(glob):
         segs = segment_file_ranges(spark, glob, segment_len=65536, overlap=4096)
-        return chunk_segments(segs, "ae", 4096, ordinals="none")
+        return chunk_segments(segs, "ae", 4096)
 
     via_dir = dedup_stats(stats(str(tmp_path / "*.parquet")), key_col="hash")
     via_file = dedup_stats(stats(str(inner)), key_col="hash")
@@ -152,12 +152,8 @@ def test_python_datasource_lazy_equals_materialized(spark):
     assert "path" in lazy.columns and "payload" not in lazy.columns
     assert "payload" in mat.columns
 
-    a = dedup_stats(
-        chunk_segments(lazy, "ae", 4096, ordinals="none"), key_col="hash"
-    ).collect()
-    b = dedup_stats(
-        chunk_segments(mat, "ae", 4096, ordinals="none"), key_col="hash"
-    ).collect()
+    a = dedup_stats(chunk_segments(lazy, "ae", 4096), key_col="hash").collect()
+    b = dedup_stats(chunk_segments(mat, "ae", 4096), key_col="hash").collect()
     assert len(a) == len(b) == 1
     assert a[0].asDict() == b[0].asDict()
 
@@ -169,7 +165,5 @@ def test_python_datasource_lazy_equals_materialized(spark):
         spark, f"{SF_DIR}/orders.parquet", num_partitions=4, **kw
     )
     assert grouped.rdd.getNumPartitions() == min(4, n_segs)
-    c = dedup_stats(
-        chunk_segments(grouped, "ae", 4096, ordinals="none"), key_col="hash"
-    ).collect()
+    c = dedup_stats(chunk_segments(grouped, "ae", 4096), key_col="hash").collect()
     assert c[0].asDict() == a[0].asDict()

@@ -208,33 +208,147 @@ def test_ramp_blob_cuts_cross_check(spark):
         assert len(set(seq_cuts) - set(dist_ends)) <= n_seams
 
 
-def test_ordinal_modes_agree_and_none_omits(spark, blob, blob_df):
-    """chunk_idx from the scalable two-phase prefix count ('bucketed',
-    default) must equal the per-blob window ordinal exactly — blob
-    length here spans multiple ordinal buckets (bucket width =
-    expected_size·1024 = 320 KiB at expected 320, segment 16 KiB), so
-    the cross-bucket base offsets are actually exercised. 'none' must
-    omit the column (the aggregate-only fast path)."""
-    kwargs = dict(algo="ae", expected_size=320, segment_len=16384)
-    bucketed = parallel_chunk_blob(blob_df, ordinals="bucketed", **kwargs)
-    windowed = parallel_chunk_blob(blob_df, ordinals="window", **kwargs)
-    b = {r["offset"]: r["chunk_idx"] for r in bucketed.collect()}
-    w = {r["offset"]: r["chunk_idx"] for r in windowed.collect()}
-    assert b == w and sorted(b.values()) == list(range(len(b)))
+def _oracle_mismatches(rows) -> list:
+    """(src_id, offset, chunk_idx, expected) for every row whose
+    chunk_idx differs from its row_number by offset within its blob."""
+    by_src: dict[int, list] = {}
+    for r in rows:
+        by_src.setdefault(r["src_id"], []).append(r)
+    bad = []
+    for sid, rs in by_src.items():
+        rs.sort(key=lambda r: r["offset"])
+        bad += [
+            (sid, r["offset"], r["chunk_idx"], i)
+            for i, r in enumerate(rs)
+            if r["chunk_idx"] != i
+        ]
+    return bad
 
-    none = parallel_chunk_blob(blob_df, ordinals="none", **kwargs)
-    assert "chunk_idx" not in none.columns
-    assert none.count() == len(b)
+
+def test_chunk_idx_equals_row_number_oracle(spark, blob):
+    """chunk_idx (Phase B's seam walk + per-segment bases) must equal the
+    row_number by offset within each blob, for every chunker, several
+    blobs per frame, a blob of one segment next to one of many, and the
+    slow ramp whose segments own fewer than 2 cuts (no done rows, no
+    base rows for them)."""
+    import random
+
+    rnd = random.Random(5)
+    ramp = bytes(min(255, i // 60) for i in range(50_000))
+    third = len(blob) // 3
+    cases = {
+        "ae": ("ae", 320, None, 16384, [(0, blob)]),
+        "rabin": ("rabin", 256, None, 8192, [(1, blob[:third]), (2, blob[third:])]),
+        "fastcdc": ("fastcdc", 256, None, 4096, [(3, rnd.randbytes(120_000))]),
+        "slow-ramp": ("ae", 320, 64, 4096, [(7, ramp)]),
+        "big-and-tiny": (
+            "ae", 4096, None, 65536,
+            [(1, rnd.randbytes(3_000_000)), (2, rnd.randbytes(100))],
+        ),
+    }
+    for name, (algo, expected, window, seg_len, blobs) in cases.items():
+        df = spark.createDataFrame(
+            [(sid, bytearray(b)) for sid, b in blobs], "src_id long, content binary"
+        )
+        rows = parallel_chunk_blob(
+            df, algo, expected, window_size=window, segment_len=seg_len
+        ).collect()
+        assert {r["src_id"] for r in rows} == {sid for sid, _ in blobs}, name
+        assert not _oracle_mismatches(rows), (name, _oracle_mismatches(rows)[:5])
+
+
+def _assert_no_ordinal_machinery(df):
+    """No window, and no join but the Phase-C piece-reassembly one: the
+    done-row ordinal LEFT join must be gone from the optimized plan."""
+    from cdc_algorithms_spark import plans as P
+
+    assert not P.window_partition_columns(df)
+    assert P.broadcast_join_count(df) + P.sort_merge_join_count(df) <= 1
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftOuter" not in optimized, optimized
 
 
 def test_stats_route_plan_has_no_ordinal_machinery(spark):
-    """The dedup-stats queries opt out of chunk_idx (ordinals='none'):
-    their plans must carry no ordinal join/window — only the Phase-C
+    """Dedup stats never read chunk_idx, so neither the registered query
+    nor the public default route (api.chunk_files → api.dedup_stats)
+    may carry any ordinal join or window — only the Phase-C
     piece-reassembly join and the dedup aggregates."""
+    from cdc_algorithms_spark import api
     from cdc_algorithms_spark import plans as P
     from cdc_algorithms_spark.queries import SPARK_QUERIES
 
     df = SPARK_QUERIES["parallel_ae_dedup_stats"](spark, "/root/testdata/sf0.001")
-    assert not P.window_partition_columns(df)
-    assert P.broadcast_join_count(df) + P.sort_merge_join_count(df) <= 1
+    _assert_no_ordinal_machinery(df)
     assert P.exchange_count(df) <= 8
+
+    public = api.dedup_stats(
+        api.chunk_files(
+            spark, "/root/testdata/sf0.001/*.parquet",
+            expected_size=4096, segment_len=262144,
+        ),
+        key_col="hash",
+    )
+    _assert_no_ordinal_machinery(public)
+
+
+def _subtree(plan: str, marker: str) -> list[str]:
+    """The lines of the first plan node containing ``marker`` and of
+    every node below it (deeper indentation), from a 'simple' explain."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if marker in line:
+            depth = len(line) - len(line.lstrip(" :+-"))
+            out = [line]
+            for below in lines[i + 1 :]:
+                if len(below) - len(below.lstrip(" :+-")) <= depth:
+                    break
+                out.append(below)
+            return out
+    raise AssertionError(f"{marker} not in plan:\n{plan}")
+
+
+def test_chunk_files_scan_spreads_over_cores(spark, tmp_path, monkeypatch):
+    """Phase A of api.chunk_files runs on min(n_segments,
+    defaultParallelism) tasks with an even share of segments each, and
+    no shuffle below the scan's MapInPandas (a repartition there hashes
+    the few metadata rows unevenly, or lets AQE merge them into ONE
+    task). Partition ids come from a TaskContext probe wrapped around
+    the cut kernel, which runs once per segment inside the scan task."""
+    import os
+    import uuid
+
+    from cdc_algorithms_spark import api
+    from cdc_algorithms_spark import plans as P
+    from cdc_algorithms_spark.operators import distributed as D
+
+    seg_len, n_files, segs_per_file = 65536, 4, 5
+    data = tmp_path / "data"
+    data.mkdir()
+    for i in range(n_files):
+        (data / f"f{i}.bin").write_bytes(os.urandom((segs_per_file - 1) * seg_len + 999))
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    marks_dir = str(marks)
+    kernel = D._BOUND_FNS["ae"]
+
+    def probe(payload, params):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        open(os.path.join(marks_dir, f"{pid}-{uuid.uuid4().hex}"), "w").close()
+        return kernel(payload, params)
+
+    monkeypatch.setitem(D._BOUND_FNS, "ae", probe)
+    chunks = api.chunk_files(
+        spark, str(data / "*.bin"), expected_size=4096, segment_len=seg_len
+    )
+    n_segments = n_files * segs_per_file
+    pids = [int(name.split("-")[0]) for name in os.listdir(marks_dir)]
+    assert len(pids) == n_segments  # every segment scanned exactly once
+    parallelism = spark.sparkContext.defaultParallelism
+    assert sorted(set(pids)) == list(range(min(n_segments, parallelism)))
+    per_task = [pids.count(p) for p in set(pids)]
+    assert max(per_task) - min(per_task) <= 1, per_task
+
+    scan = _subtree(P.physical_plan(chunks, "simple"), "MapInPandas")
+    assert not [line for line in scan if "Exchange" in line], "\n".join(scan)

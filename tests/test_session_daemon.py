@@ -101,3 +101,53 @@ def test_zipimport_patch_scoped_to_spark_install_zips(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert "SCOPED_OK" in out.stdout
+
+
+def test_worker_freezes_spark_install_archives_only(spark, tmp_path):
+    """On a real worker: every .zip/.jar on sys.path that resolves into
+    $SPARK_HOME (pyspark.zip, py4j, the spark-core jar Spark lists for
+    its Python files) skips the per-task central-directory re-read,
+    while a zip shipped with ``sc.addPyFile`` is still re-read. The
+    probe runs inside a task, so the counting hook never touches this
+    test process, and it is removed before the task ends."""
+    import zipfile
+
+    shipped = tmp_path / "freeze_probe_lib.zip"
+    with zipfile.ZipFile(shipped, "w") as z:
+        z.writestr("freeze_probe_mod.py", "X = 1\n")
+    spark.sparkContext.addPyFile(str(shipped))
+
+    def probe(_rows):
+        import os
+        import sys
+        import zipimport
+
+        home = os.path.join(os.path.realpath(os.environ["SPARK_HOME"]), "")
+        reads: list[str] = []
+        orig = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return orig(path)
+
+        zipimport._read_directory = counting
+        try:
+            out = []
+            for p in sys.path:
+                if p.endswith((".zip", ".jar")) and os.path.isfile(p):
+                    importer = zipimport.zipimporter(p)
+                    reads.clear()
+                    importer.invalidate_caches()
+                    out.append(
+                        (p, os.path.realpath(p).startswith(home), bool(reads))
+                    )
+        finally:
+            zipimport._read_directory = orig
+        yield out
+
+    [archives] = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    install = [(p, reread) for p, inside, reread in archives if inside]
+    assert any(p.endswith("pyspark.zip") for p, _ in install), archives
+    assert not [p for p, reread in install if reread], archives
+    user = [reread for p, inside, reread in archives if p.endswith(shipped.name)]
+    assert user == [True], archives
